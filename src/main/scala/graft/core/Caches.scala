@@ -3,6 +3,7 @@ package graft.core
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.types.StructType
 
 /** Session-scoped registry for the library's deliberate `cache()` calls.
   *
@@ -52,7 +53,29 @@ object Caches {
     ds
   }
 
-  /** Unpersist every frame the library has cached since the last release.
+  /** Parquet table schemas keyed by file snapshot and reader confs — the
+    * memo behind `graft.queries.Tables.schemaOf`. LRU, at most
+    * [[SchemaMemoBound]] entries; [[release]] clears it. */
+  private val SchemaMemoBound = 256
+  private val schemas =
+    new java.util.LinkedHashMap[AnyRef, StructType](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[AnyRef, StructType]): Boolean =
+        size() > SchemaMemoBound
+    }
+
+  /** The memoized schema for `key`, inferring it with `infer` on a miss. */
+  def schemaMemo(key: AnyRef)(infer: => StructType): StructType =
+    schemas.synchronized(Option(schemas.get(key))).getOrElse {
+      val s = infer // outside the lock: it reads a footer, or runs a Spark job
+      schemas.synchronized(schemas.put(key, s))
+      s
+    }
+
+  /** Number of memoized table schemas. */
+  def schemaMemoSize: Int = schemas.synchronized(schemas.size())
+
+  /** Unpersist every frame the library has cached since the last release,
+    * and drop the memoized table schemas.
     * Non-blocking by default (the executors drop blocks asynchronously);
     * safe to call at any point — in-flight queries hold their own RDD
     * references and recompute from lineage if a block disappears. */
@@ -62,6 +85,7 @@ object Caches {
       ds.unpersist(blocking)
       ds = tracked.poll()
     }
+    schemas.synchronized(schemas.clear())
   }
 
   /** Number of currently-tracked (not yet released) cached frames. */

@@ -94,39 +94,94 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
   def failOnGlobalWindow(b: Boolean = true): Swift =
     withCfg(cfg.copy(failOnGlobalWindow = b))
 
-  /** Row count, needed by the K3 cost model. For file sources Spark
-    * answers count() from footer metadata + columnar batch counts — no
-    * full materialization — so this stays cheap at scale. */
-  lazy val nrows: Long = df.count()
+  // ---- K1 probe: row count + sample in one scan (base.py:21,46-47) ----
+  @volatile private[this] var probed: Probe = null
 
-  // ---- K1 sample extraction (base.py:21,46-47) ----
-  /** min(sampleSize, ceil(n/25)) rows — the reference's shrink rule for
-    * small inputs. The draw is a seeded RANDOM Bernoulli sample at
-    * fraction k/n (the reference draws random sorted positions,
-    * base.py:46-47): a prefix `limit(k)` only sees leading-partition rows,
-    * so a vectorized candidate that is wrong only on data appearing later
-    * (a null pattern, a dtype quirk in a later file) would be accepted —
-    * exactly what the probe must prevent. No `limit` on the sampled plan
-    * either: limit-after-sample would again prefer leading partitions.
-    * The drawn size concentrates at k (±O(√k)); the prefix path remains
-    * only as a fallback for degenerate (empty) draws and tiny inputs. */
-  private[core] def sampleRows(): Array[Row] = {
-    val k =
-      if (nrows == 0) 0
-      else if (nrows <= 25000) math.max(1, math.ceil(nrows / 25.0).toInt)
-      else cfg.sampleSize
-    if (k == 0) return Array.empty
-    if (k >= nrows) return df.limit(k).collect()
-    val frac = math.min(1.0, k.toDouble / nrows)
-    val drawn = df.sample(withReplacement = false, frac, cfg.sampleSeed).collect()
-    if (drawn.nonEmpty) drawn else df.limit(k).collect()
+  /** The selector's probe: ONE scan of `df` that counts every row and
+    * keeps a seeded uniform bottom-k sample of up to `cfg.sampleSize`
+    * rows ([[ProbeScan]]). Runs at most once per handle, on first use.
+    * Driver memory is bounded by the sample, not the input: each merge
+    * level hands the driver k-row partials, and only the final ≤ k rows
+    * are deserialized to `Row`. */
+  private[core] def probe: Probe = {
+    if (probed == null) synchronized {
+      if (probed == null) probed = ProbeScan.run(df, cfg.sampleSize, cfg.sampleSeed)
+    }
+    probed
   }
+
+  private[this] lazy val counted: Long = df.count()
+
+  /** Exact row count, needed by the K3 cost model: the probe's count when
+    * the probe has run, else a plain `count()` — a caller that needs
+    * only `n` never pays the probe's full-row scan. */
+  def nrows: Long = { val p = probed; if (p != null) p.nrows else counted }
+
+  /** K1 — the probe sample cut to the reference's shrink rule
+    * min(sampleSize, ceil(n/25)) (base.py:21). A prefix of the
+    * bottom-k sample is itself a uniform random sample, so a vectorized
+    * candidate that is wrong only on rows late in the scan (a null
+    * pattern, a dtype quirk in a later file) is still caught — which a
+    * `limit(k)` prefix of the input would miss. */
+  private[core] def sampleRows(): IndexedSeq[Row] = {
+    val p = probe
+    p.sample.take(math.min(cfg.sampleSize.toLong, (p.nrows + 24) / 25).toInt)
+  }
+
+  /** Every input row for a driver-local route: the probe's rows when they
+    * already hold the whole input (n ≤ sampleSize), else one `collect()`
+    * — refused past `localMaxRows` with a [[LocalRouteBoundExceeded]]. */
+  private def localRows(route: String): Seq[Row] =
+    probe.all.getOrElse {
+      if (nrows > cfg.localMaxRows)
+        throw new LocalRouteBoundExceeded(route, nrows, cfg.localMaxRows, rejected)
+      df.collect().toSeq
+    }
+
+  /** The whole input, when the probe has run and its sample holds it. */
+  private[core] def probedRows: Option[Seq[Row]] = Option(probed).flatMap(_.all)
 
   private def localDf(rows: Seq[Row], schema: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, schema)
 
   /** Strategy of the last apply-family call, for tests/introspection. */
   @volatile var lastStrategy: SwiftStrategy = SwiftStrategy.Parallel
+
+  @volatile private[this] var sampled = 0
+  @volatile private[this] var rejected: Option[String] = None
+
+  /** Rows the last selector call tested its candidates on (0 when it
+    * made no probe: forceParallel, empty input, no candidate to test). */
+  def lastSampleSize: Int = sampled
+
+  /** Why the last selector call rejected a candidate — the first line of
+    * its error, or the first sampled row it got wrong — tagged with the
+    * probe (K2 vectorized, K5 parallel) that rejected it. None when no
+    * candidate was rejected. */
+  def lastRejection: Option[String] = rejected
+
+  private def noteProbe(sampleSize: Int): Unit = { sampled = sampleSize; rejected = None }
+
+  /** Run `got` (the candidate on the sample) against the row-function
+    * `oracle`; a mismatch or an exception is recorded as the rejection. */
+  private def certify(probeName: String)(got: => Seq[Any], oracle: Seq[Any]): Boolean = {
+    val why =
+      try {
+        val g = Progress.suppressed(got)
+        if (Swift.sameValues(g, oracle)) None
+        else {
+          val i = g.indices.find(i => i >= oracle.size || !Swift.sameValue(g(i), oracle(i)))
+          Some(i.fold(s"${g.size} results for ${oracle.size} sampled rows")(i =>
+            s"sampled row $i: got ${g(i)}, row function gives ${oracle.lift(i).orNull}"))
+        }
+      } catch {
+        case e: Exception =>
+          val first = String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")
+          Some(s"${e.getClass.getSimpleName}: $first")
+      }
+    why.foreach(w => rejected = Some(s"$probeName: $w"))
+    why.isEmpty
+  }
 
   private def finish(out: DataFrame, s: SwiftStrategy): DataFrame = {
     lastStrategy = s
@@ -148,55 +203,46 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
       vectorized: Option[Column] = None): DataFrame = {
     val theUdf = udf(rowFn)
     def parallelPlan: DataFrame = df.withColumn(out, theUdf(col(colName)))
+    def localPlan(route: String): DataFrame =
+      localDf(localRows(route), df.schema).withColumn(out, theUdf(col(colName)))
+    noteProbe(0)
 
-    // empty input short-circuits to the naive path (swifter/swifter.py:292-294)
-    if (nrows == 0) return finish(parallelPlan, SwiftStrategy.Parallel)
-    if (cfg.forceParallel) return finish(parallelPlan, SwiftStrategy.Parallel)
+    // K9 bypass (swifter/swifter.py:131-138) before any probe job; empty
+    // input short-circuits to the same naive path (swifter/swifter.py:292-294)
+    if (cfg.forceParallel || probe.nrows == 0) return finish(parallelPlan, SwiftStrategy.Parallel)
 
     val sample = sampleRows()
+    noteProbe(sample.size)
     val idx = df.schema.fieldIndex(colName)
-    val sampleIn: Seq[T] = sample.toSeq.map(r => r.getAs[T](idx))
+    val sampleIn: Seq[T] = sample.map(r => r.getAs[T](idx))
     // driver oracle = row-at-a-time result on the sample (K7: suppressed)
     val oracle: Seq[Any] = Progress.suppressed { sampleIn.map(v => rowFn(v)) }
 
     // ---- K2 vectorization probe (swifter/swifter.py:309-317) ----
+    // K5 fallback chain: expression -> UDF
     vectorized.foreach { vec =>
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema).select(vec.as(out)).collect().toSeq.map(_.get(0))
-        }
-        if (Swift.sameValues(got, oracle))
-          return finish(df.withColumn(out, vec), SwiftStrategy.Vectorized)
-      } catch { case _: Exception => () } // K5 fallback chain: expression -> UDF
+      if (certify("K2")(
+          localDf(sample, df.schema).select(vec.as(out)).collect().toSeq.map(_.get(0)), oracle))
+        return finish(df.withColumn(out, vec), SwiftStrategy.Vectorized)
     }
 
     // ---- K3 cost model (swifter/swifter.py:319-326) ----
     val estSec = estimateFullRunSec(sampleIn.size) {
       Progress.suppressed { var i = 0; while (i < sampleIn.size) { rowFn(sampleIn(i)); i += 1 } }
     }
-    if (estSec <= cfg.thresholdSec && nrows <= cfg.localMaxRows) {
-      // driver-local route: run the same plan over a LocalRelation —
-      // single in-memory partition, no scan/shuffle/job-per-stage overhead.
-      val all = df.collect()
-      val res = localDf(all.toSeq, df.schema).withColumn(out, theUdf(col(colName)))
-      return finish(res, SwiftStrategy.Local)
-    }
+    // driver-local route: run the same plan over a LocalRelation —
+    // single in-memory partition, no scan/shuffle/job-per-stage overhead.
+    if (estSec <= cfg.thresholdSec && nrows <= cfg.localMaxRows)
+      return finish(localPlan("K3 local route"), SwiftStrategy.Local)
 
     // ---- K5 parallel-correctness validation (swifter/swifter.py:262-268) ----
-    val validated =
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema)
-            .withColumn(out, theUdf(col(colName))).collect().toSeq.map(_.getAs[Any](out))
-        }
-        Swift.sameValues(got, oracle)
-      } catch { case _: Exception => false }
+    val validated = certify("K5")(
+      localDf(sample, df.schema).withColumn(out, theUdf(col(colName)))
+        .collect().toSeq.map(_.getAs[Any](out)),
+      oracle)
     if (validated) finish(parallelPlan, SwiftStrategy.Parallel)
-    else { // final fallback: local naive loop (reference :283-285)
-      val all = df.collect()
-      finish(localDf(all.toSeq, df.schema).withColumn(out, theUdf(col(colName))),
-        SwiftStrategy.Local)
-    }
+    else // final fallback: local naive loop (reference :283-285)
+      finish(localPlan("K5 fallback"), SwiftStrategy.Local)
   }
 
   /** K3 — time `body` nRepeats times, extrapolate sample→full duration:
@@ -240,34 +286,36 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     val rowFn: Row => Any =
       if (!opaque) rawRowFn
       else r => { val v = rawRowFn(r); if (v == null) null else v.toString }
-    if (nrows == 0) {
+    noteProbe(0)
+    // K9 bypass: no probe job unless the output type must be inferred from
+    // the sample (K6); the empty-input type rule below is unchanged
+    if (cfg.forceParallel && (outType.isDefined || opaque))
+      return finish(mapRowsDistributed(df, out, rowFn, outType.getOrElse(StringType)),
+        SwiftStrategy.Parallel)
+    if (probe.nrows == 0) {
       val dt = outType.getOrElse(if (opaque) StringType else NullType)
       return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
     }
     val sample = sampleRows()
-    val oracle: Seq[Any] = Progress.suppressed { sample.toSeq.map(rowFn) }
+    noteProbe(sample.size)
+    val oracle: Seq[Any] = Progress.suppressed { sample.map(rowFn) }
     val dt = outType.getOrElse(if (opaque) StringType else TypeInfer.of(oracle))
 
     if (cfg.forceParallel)
       return finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
 
     vectorized.foreach { vec =>
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema).select(vec.as(out)).collect().toSeq.map(_.get(0))
-        }
-        if (Swift.sameValues(got, oracle))
-          return finish(df.withColumn(out, vec), SwiftStrategy.Vectorized)
-      } catch { case _: Exception => () }
+      if (certify("K2")(
+          localDf(sample, df.schema).select(vec.as(out)).collect().toSeq.map(_.get(0)), oracle))
+        return finish(df.withColumn(out, vec), SwiftStrategy.Vectorized)
     }
 
     val estSec = estimateFullRunSec(sample.length) {
       Progress.suppressed { var i = 0; while (i < sample.length) { rowFn(sample(i)); i += 1 } }
     }
     if (estSec <= cfg.thresholdSec && nrows <= cfg.localMaxRows) {
-      val all = df.collect()
-      val res = mapRowsDistributed(localDf(all.toSeq, df.schema), out, rowFn, dt)
-      finish(res, SwiftStrategy.Local)
+      val all = localDf(localRows("K3 local route"), df.schema)
+      finish(mapRowsDistributed(all, out, rowFn, dt), SwiftStrategy.Local)
     } else finish(mapRowsDistributed(df, out, rowFn, dt), SwiftStrategy.Parallel)
   }
 
@@ -327,6 +375,8 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
     val res = inner.applyScalar[scala.collection.Seq[Double], Double](tmp, out)(
       xs => fn(xs.toSeq), vectorized)
     lastStrategy = inner.lastStrategy
+    sampled = inner.lastSampleSize
+    rejected = inner.lastRejection
     res.drop(tmp)
   }
 
@@ -400,23 +450,21 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
         if (cols.contains(c)) mk(col(c)).as(c) else col(c)
       }: _*)
 
-    if (nrows == 0 || cfg.forceParallel) return finish(project(theUdf(_)), SwiftStrategy.Parallel)
+    noteProbe(0)
+    // no candidate to test (or K9 bypass): the UDF projection, no probe job
+    if (cfg.forceParallel || vectorized.isEmpty || probe.nrows == 0)
+      return finish(project(theUdf(_)), SwiftStrategy.Parallel)
 
-    vectorized.foreach { vec =>
-      val sample = sampleRows()
-      val probeCol = cols.head
-      val idx = df.schema.fieldIndex(probeCol)
-      val oracle = Progress.suppressed { sample.toSeq.map(r => rowFn(r.getAs[T](idx))) }
-      try {
-        val got = Progress.suppressed {
-          localDf(sample.toSeq, df.schema).select(vec(col(probeCol)).as("p"))
-            .collect().toSeq.map(_.get(0))
-        }
-        if (Swift.sameValues(got, oracle))
-          return finish(project(vec), SwiftStrategy.Vectorized)
-      } catch { case _: Exception => () }
-    }
-    finish(project(theUdf(_)), SwiftStrategy.Parallel)
+    val vec = vectorized.get
+    val sample = sampleRows()
+    noteProbe(sample.size)
+    val probeCol = cols.head
+    val idx = df.schema.fieldIndex(probeCol)
+    val oracle = Progress.suppressed { sample.map(r => rowFn(r.getAs[T](idx))) }
+    if (certify("K2")(localDf(sample, df.schema).select(vec(col(probeCol)).as("p"))
+        .collect().toSeq.map(_.get(0)), oracle))
+      finish(project(vec), SwiftStrategy.Vectorized)
+    else finish(project(theUdf(_)), SwiftStrategy.Parallel)
   }
 
   // =====================================================================
@@ -549,6 +597,16 @@ final class Swift(val df: DataFrame, val cfg: SwiftConfig) {
   def resample(rule: String, tsCol: String): SwiftResample =
     new SwiftResample(this, rule, tsCol)
 }
+
+/** A driver-local route refused to `collect()` an input past the
+  * `localMaxRows` bound — at cluster scale that collect is a driver OOM,
+  * not a fallback. `reason` is the probe rejection that sent the call
+  * there, if any ([[Swift.lastRejection]]). */
+final class LocalRouteBoundExceeded(val route: String, val nrows: Long, val bound: Long,
+    val reason: Option[String])
+  extends IllegalStateException(
+    s"$route would collect $nrows rows to the driver, over localMaxRows=$bound" +
+      reason.fold("")(r => s" (after $r)"))
 
 /** pandas `result_type` for O2 (docs/documentation.md:103-108). */
 sealed trait ResultType

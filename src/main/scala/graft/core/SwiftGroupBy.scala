@@ -91,9 +91,11 @@ final class SwiftGroupBy(sw: Swift, by: Seq[String], subset: Option[Seq[String]]
   def resample(rule: String, tsCol: String): SwiftResample =
     sw.resample(rule, tsCol).by(by: _*)
 
-  private def inputDf: DataFrame = {
+  private def inputDf: DataFrame = inputOf(df)
+
+  private def inputOf(src: DataFrame): DataFrame = {
     val base =
-      subset.fold(df)(cols => df.select((by ++ cols).distinct.map(col).toIndexedSeq: _*))
+      subset.fold(src)(cols => src.select((by ++ cols).distinct.map(col).toIndexedSeq: _*))
     if (dropNulls) base.filter(by.map(col(_).isNotNull).reduce(_ && _))
     else base
   }
@@ -109,7 +111,11 @@ final class SwiftGroupBy(sw: Swift, by: Seq[String], subset: Option[Seq[String]]
     val in =
       if (sw.nrows <= sw.cfg.groupbyLocalMaxRows) {
         sw.lastStrategy = SwiftStrategy.Local
-        df.sparkSession.createDataFrame(in0.collect().toSeq.asJava, in0.schema)
+        // rows the probe already holds (it ran, and n <= sampleSize) are
+        // not collected again: the projection runs over a LocalRelation
+        val src = sw.probedRows.fold(in0)(rows =>
+          inputOf(df.sparkSession.createDataFrame(rows.asJava, df.schema)))
+        df.sparkSession.createDataFrame(src.collect().toSeq.asJava, in0.schema)
       } else { sw.lastStrategy = SwiftStrategy.Parallel; in0 }
 
     val keySchema = StructType(by.map(c => in.schema(c)))
@@ -127,7 +133,8 @@ final class SwiftGroupBy(sw: Swift, by: Seq[String], subset: Option[Seq[String]]
     * c0..cN unless `names` is given.
     *
     * The probe group is drawn from the K1 sample ([[Swift.sampleRows]] —
-    * one bounded draw), NOT by re-filtering the input for one key: a
+    * the one probe scan, which also answers the row count the routing in
+    * [[apply]] needs), NOT by re-filtering the input for one key: a
     * filter on a non-partition column can't prune, so the old
     * `filter(key).limit(1000)` probe cost a full scan at scale. The
     * sampled group may be a SUBSET of the real group — fine, because the

@@ -1,8 +1,16 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType,
+  TimestampType}
 
 /** Shared helpers for the declared query set (SparkEntry.queries).
   *
@@ -22,7 +30,75 @@ object Tables {
     * TIMESTAMP(NANOS) encoding surfaces as LongType instead of a reader
     * refusal — `t` itself never mutates session conf. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
+    normalizeTs(raw(spark, dir, name))
+
+  /** The table as stored (no [[normalizeTs]]), opened with its memoized
+    * schema: no schema-inference job. */
+  private def raw(spark: SparkSession, dir: String, name: String): DataFrame =
+    spark.read.schema(schemaOf(spark, dir, name)).parquet(s"$dir/$name.parquet")
+
+  /** The stored (pre-[[normalizeTs]]) schema of table `name` under `dir`.
+    * `spark.read.parquet(path)` without a schema runs a one-task
+    * schema-inference job on every open. This reads the same footer Spark
+    * would (a summary file, else the first data file by path) on the
+    * driver, through Spark's own footer-to-schema conversion, and
+    * memoizes the result per file snapshot — every file's path, length
+    * and mtime — and per session parquet confs, so a rewritten file or a
+    * changed conf (`nanosAsLong`, `binaryAsString`, ...) gets a fresh
+    * schema. Schema merging and partitioned directories fall back to
+    * Spark's inference job. Memoized in `graft.core.Caches` (bounded LRU,
+    * cleared by `Caches.release()`). The one way the library opens a
+    * table. */
+  def schemaOf(spark: SparkSession, dir: String, name: String): StructType = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val given = new Path(s"$dir/$name.parquet")
+    val fs = given.getFileSystem(hadoopConf)
+    val path = fs.makeQualified(given)
+    val files = Vector.newBuilder[FileStatus]
+    val it = fs.listFiles(path, true)
+    while (it.hasNext) files += it.next()
+    val snapshot = files.result().sortBy(_.getPath.toString)
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = (snapshot.map(f => (f.getPath.toString, f.getLen, f.getModificationTime)), confs)
+    graft.core.Caches.schemaMemo(key) {
+      footerSchema(spark, hadoopConf, path, snapshot)
+        .getOrElse(spark.read.parquet(path.toString).schema)
+    }
+  }
+
+  /** What `ParquetUtils.inferSchema` + `ParquetFileFormat.mergeSchemasInParallel`
+    * compute for an unmerged, unpartitioned table, without their Spark job. */
+  private def footerSchema(spark: SparkSession, hadoopConf: Configuration, root: Path,
+      files: Seq[FileStatus]): Option[StructType] = {
+    val c = spark.sessionState.conf
+    def rel(f: FileStatus) = f.getPath.toString.stripPrefix(root.toString).split('/')
+    // the listing InMemoryFileIndex keeps: no _/. names beyond the summaries
+    val summaries = Set("_metadata", "_common_metadata")
+    val visible = files.filterNot(f => rel(f).exists(n =>
+      (n.startsWith("_") && !summaries(n)) || n.startsWith(".") || n.endsWith("._COPYING_")))
+    val partitioned = visible.exists(f => rel(f).dropRight(1).exists(_.contains("=")))
+    if (c.isParquetSchemaMergingEnabled || partitioned) None
+    else {
+      def named(n: String) = visible.find(_.getPath.getName == n)
+      named("_common_metadata").orElse(named("_metadata"))
+        .orElse(visible.find(f => !summaries(f.getPath.getName)))
+        .map { f =>
+          val footer = new Footer(f.getPath, ParquetFooterReader.readFooter(
+            HadoopInputFile.fromStatus(f, hadoopConf), ParquetMetadataConverter.SKIP_ROW_GROUPS))
+          // the converter mergeSchemasInParallel builds
+          val converter = new ParquetToSparkSchemaConverter(
+            assumeBinaryIsString = c.isParquetBinaryAsString,
+            assumeInt96IsTimestamp = c.isParquetINT96AsTimestamp,
+            inferTimestampNTZ = c.parquetInferTimestampNTZEnabled,
+            nanosAsLong = c.legacyParquetNanosAsLong,
+            respectUnknownTypeAnnotation = c.parquetReaderRespectUnknownTypeAnnotation)
+          // file sources read every column as nullable
+          GraftBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(footer, converter))
+        }
+    }
+  }
 
   /** Normalize a `ts` column to session-tz TimestampType regardless of
     * the physical encoding the testdata generator used this round. The
@@ -92,8 +168,8 @@ object Tables {
   def driftReport(spark: SparkSession, dir: String): Seq[String] =
     expectedSchemas.flatMap { case (table, want) =>
       try {
-        val raw = spark.read.parquet(s"$dir/$table.parquet")
-        val got = normalizeTs(raw).schema.map(f => f.name -> f.dataType.simpleString)
+        val stored = raw(spark, dir, table)
+        val got = normalizeTs(stored).schema.map(f => f.name -> f.dataType.simpleString)
         if (got == want) Nil
         else {
           val gotM = got.toMap
@@ -103,7 +179,7 @@ object Tables {
             got.collect { case (n, t) if !wantM.contains(n) => s"unexpected column $n ($t)" } ++
             want.collect { case (n, t) if gotM.get(n).exists(_ != t) =>
               s"column $n: expected $t, got ${gotM(n)}" }
-          val rawS = raw.schema.map(f => s"${f.name}=${f.dataType.simpleString}")
+          val rawS = stored.schema.map(f => s"${f.name}=${f.dataType.simpleString}")
             .mkString(", ")
           diffs.map(d => s"$table: $d [raw parquet reads as: $rawS]")
         }

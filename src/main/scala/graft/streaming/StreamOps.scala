@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
+import graft.queries.Tables
+
 /** Structured Streaming twins of the batch time-series operators
   * (SURVEY.md §2.3 marks streaming absent in the reference; resample O6
   * and sessionization extend naturally to `readStream`).
@@ -61,7 +63,7 @@ object StreamOps {
       java.nio.file.Files.createSymbolicLink(
         tmp.resolve(s"$table.parquet"),
         java.nio.file.Paths.get(s"$dir/$table.parquet"))
-      graft.queries.Tables.deleteOnExit(tmp)
+      Tables.deleteOnExit(tmp)
       tmp.toString
     })
 
@@ -87,11 +89,11 @@ object StreamOps {
   def resampleOnce(spark: SparkSession, dir: String, rule: String,
       sinkName: String = "stream_resample_sink"): DataFrame = {
     val tmp = linkedDir(dir, "events")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "events")
     // normalizeTs handles whichever physical ts encoding this round's
     // generator shipped (raw nanos long / TIMESTAMP_NTZ / timestamp) —
     // a pure projection, so it composes with the streaming source.
-    val src = graft.queries.Tables.normalizeTs(
+    val src = Tables.normalizeTs(
       spark.readStream.schema(schema).parquet(tmp))
     val agg = src
       .withWatermark("ts", "1 day")
@@ -123,7 +125,7 @@ object StreamOps {
       slide: Option[String] = None): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[EventRec].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventRec]
@@ -159,7 +161,7 @@ object StreamOps {
   def dedupOnce(spark: SparkSession, dir: String, keyCols: Seq[String],
       sinkName: String = "stream_dedup_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     // see resampleOnceMem: size state partitions to the workload, not CPUs
     withHarnessConf(spark, "4") { ckpt =>
@@ -201,13 +203,13 @@ object StreamOps {
         .withColumn("nd", size(col("ds")).cast("long"))
         .withColumn("bands", bands(minhash_sig(col("ds"))))
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     // cached (tracked, see graft.core.Caches): the static side of a
     // stream-static join is re-planned EVERY microbatch — the cache both
     // avoids re-shingling the history per batch and keeps measured stats
     // for the per-batch join strategy
     val hist = graft.core.Caches.cached(
-      shingled(spark.read.parquet(s"$dir/documents.parquet")
+      shingled(Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % histMod =!= 0)))
     val histIdx = hist.select(col("id").as("match_id"),
       col("ds").as("dsh"), col("nd").as("nh"),
@@ -245,7 +247,7 @@ object StreamOps {
       sinkName: String = "stream_ohlc_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(unix_micros(col("ts")).as("ts_us"), col("event_id"), col("value"))
       .as[EventIdRec].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[EventIdRec]
@@ -288,8 +290,8 @@ object StreamOps {
     def grams(df: DataFrame): DataFrame =
       graft.operators.Decontaminate.explodedGrams(df, "doc_id", "text", n)
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val ev = grams(spark.read.parquet(s"$dir/documents.parquet")
+    val schema = Tables.schemaOf(spark, dir, "documents")
+    val ev = grams(Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % evalMod === 0))
       .select(col("g")).distinct()
     val src = spark.readStream.schema(schema).parquet(tmp)
@@ -325,8 +327,8 @@ object StreamOps {
     def grams(df: DataFrame): DataFrame =
       graft.operators.Decontaminate.explodedGrams(df, "doc_id", "text", n)
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val tr = grams(spark.read.parquet(s"$dir/documents.parquet")
+    val schema = Tables.schemaOf(spark, dir, "documents")
+    val tr = grams(Tables.t(spark, dir, "documents")
         .filter(col("doc_id") % evalMod =!= 0))
       .select(col("g")).distinct().withColumn("hit", lit(1L))
     val src = spark.readStream.schema(schema).parquet(tmp)
@@ -358,7 +360,7 @@ object StreamOps {
   def cdcChunksOnce(spark: SparkSession, dir: String, n: Int, modK: Int,
       sinkName: String = "stream_cdc_chunks_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.Chunking.cdcChunks(src, "doc_id", "text", n, modK)
     withHarnessConf(spark, "4") { ckpt =>
@@ -382,7 +384,7 @@ object StreamOps {
       patterns: Seq[(String, String)],
       sinkName: String = "stream_pii_stats_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val agg = graft.operators.TextAnalysis.piiStats(src, "source", "text", patterns)
     withHarnessConf(spark, "4") { ckpt =>
@@ -406,7 +408,7 @@ object StreamOps {
       minWords: Int, minLines: Int, badWords: Seq[String],
       sinkName: String = "stream_clean_lines_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.TextAnalysis.cleanLines(
       graft.operators.TextAnalysis.segmentLines(src, "doc_id", "text", wordsPerLine),
@@ -433,7 +435,7 @@ object StreamOps {
   def winnowOnce(spark: SparkSession, dir: String, w: Int,
       sinkName: String = "stream_winnow_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.TextAnalysis.winnow(src, "doc_id", "text", w)
     withHarnessConf(spark, "4") { ckpt =>
@@ -458,7 +460,7 @@ object StreamOps {
       table: Seq[Long], buckets: Int,
       sinkName: String = "stream_dsir_score_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val out = graft.operators.Mixture.importanceScore(
       src, "doc_id", "text", table, buckets)
@@ -490,7 +492,7 @@ object StreamOps {
     require(dims % subspaces == 0,
       s"dims ($dims) must divide evenly into subspaces ($subspaces)")
     val sub = dims / subspaces
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
+    val batch = Tables.t(spark, dir, "embeddings")
     val cbRows = graft.operators.Similarity
       .pqCodebook(graft.operators.Similarity.fixedPoint(
         batch, "vec_id", "embedding"), subspaces, codebookK, sub)
@@ -516,7 +518,7 @@ object StreamOps {
     require(dims % subspaces == 0,
       s"dims ($dims) must divide evenly into subspaces ($subspaces)")
     val sub = dims / subspaces
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
+    val batch = Tables.t(spark, dir, "embeddings")
     // Shared trained-book memo (Similarity.pqCodebookTrainedShared): the
     // streaming encoder loads the SAME collected artifact the batch
     // searchers train — one Lloyd run per (source, params) per session
@@ -539,7 +541,7 @@ object StreamOps {
     require((0 until subspaces).forall(byM.contains),
       "codebook is missing a subspace's codewords (empty embeddings " +
       "input?) — the plan-literal encoder needs >= 1 codeword per m")
-    val batchSchema = spark.read.parquet(s"$dir/embeddings.parquet").schema
+    val batchSchema = Tables.schemaOf(spark, dir, "embeddings")
     val tmp = linkedDir(dir, "embeddings")
     val src = spark.readStream.schema(batchSchema).parquet(tmp)
     val fx = graft.operators.Similarity.fixedPoint(src, "vec_id", "embedding")
@@ -593,7 +595,7 @@ object StreamOps {
     require(k >= 1 && k <= 64,
       s"k must be in [1, 64] for the plan-literal encoder (got $k); " +
       "beyond 64 use the batch kMeansAssign's broadcast-join shape")
-    val batch = spark.read.parquet(s"$dir/embeddings.parquet")
+    val batch = Tables.t(spark, dir, "embeddings")
     val cents = graft.operators.Similarity
       .pqCodebookTrainedShared(graft.operators.Similarity.fixedPoint(
         batch, "vec_id", "embedding"), 1, k, dims, iters)
@@ -640,7 +642,7 @@ object StreamOps {
     * aggregating the emitted counts per source reproduces it exactly. */
   def oovTagOnce(spark: SparkSession, dir: String, k: Int,
       sinkName: String = "stream_oov_sink"): DataFrame = {
-    val batch = spark.read.parquet(s"$dir/documents.parquet")
+    val batch = Tables.t(spark, dir, "documents")
     val vocab = graft.operators.TextAnalysis.vocab(batch, "text", k)
       .collect().map(_.getString(0)) // k strings — the bounded artifact
     val tmp = linkedDir(dir, "documents")
@@ -708,7 +710,7 @@ object StreamOps {
       sinkName: String = "stream_funnel_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("event_id"))
       .as[(Long, Long, String, Long)].collect()
@@ -809,7 +811,7 @@ object StreamOps {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val weekUs = 7L * 24 * 3600 * 1000000L
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"))
       .as[(Long, Long)].collect()
     val ms = org.apache.spark.sql.execution.streaming.runtime
@@ -844,7 +846,7 @@ object StreamOps {
       sinkName: String = "stream_funnel_tws_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("event_id"))
       .as[(Long, Long, String, Long)].collect()
@@ -948,7 +950,7 @@ object StreamOps {
       sinkName: String = "stream_transitions_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .orderBy("ts_us", "event_id")
@@ -999,7 +1001,7 @@ object StreamOps {
   def transitionsOnceFile(spark: SparkSession, dir: String,
       sinkName: String = "stream_transitions_file_sink"): DataFrame = {
     import spark.implicits._
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
+    val feed0 = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
     val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
@@ -1087,7 +1089,7 @@ object StreamOps {
     * change waves 1 and 2 (updates, deletes, inserts, a re-delete and a
     * ghost delete — every MERGE edge case). One frame, (k, seq, op, v). */
   private def mergeFeed(spark: SparkSession, dir: String): DataFrame = {
-    val ord = graft.queries.Tables.t(spark, dir, "orders")
+    val ord = Tables.t(spark, dir, "orders")
     val k = col("o_orderkey")
     def cents = (col("o_totalprice").cast(DecimalType(20, 6)) * 100)
       .cast("long")
@@ -1151,7 +1153,7 @@ object StreamOps {
   private[graft] def stageWaveFiles(feed: DataFrame, waveCol: String,
       waves: Seq[Long], prefix: String): java.nio.file.Path = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    graft.queries.Tables.deleteOnExit(tmp)
+    Tables.deleteOnExit(tmp)
     // ONE pass over the feed (r17): the per-wave loop used to recompute
     // the whole feed subtree once per wave (filter + coalesce(1) write =
     // N full evaluations). A partitioned write keyed by a DUPLICATED dir
@@ -1242,7 +1244,7 @@ object StreamOps {
       sinkName: String = "stream_domain_cap_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "documents")
+    val recs = Tables.t(spark, dir, "documents")
       .select(concat(lit("site"), (col("doc_id") % 50).cast("string"),
         lit(".com")).as("domain"), col("doc_id"))
       .as[(String, Long)].collect().sortBy(_._2)
@@ -1325,7 +1327,7 @@ object StreamOps {
       sinkName: String = "stream_attr_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6))
@@ -1373,7 +1375,7 @@ object StreamOps {
   def attributionOnceFile(spark: SparkSession, dir: String,
       sinkName: String = "stream_attr_file_sink"): DataFrame = {
     import spark.implicits._
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
+    val feed0 = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6))
@@ -1462,7 +1464,7 @@ object StreamOps {
       sinkName: String = "stream_scd2_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
       .orderBy("ts_us", "event_id")
@@ -1513,7 +1515,7 @@ object StreamOps {
   def scd2OnceFile(spark: SparkSession, dir: String,
       sinkName: String = "stream_scd2_file_sink"): DataFrame = {
     import spark.implicits._
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
+    val feed0 = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
     val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
@@ -1651,7 +1653,7 @@ object StreamOps {
       sinkName: String = "stream_holt_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"),
         (col("value").cast(org.apache.spark.sql.types.DecimalType(20, 6))
@@ -1698,7 +1700,7 @@ object StreamOps {
     require(batches >= 1, "need at least one replay batch")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val docs = graft.queries.Tables.t(spark, dir, "documents")
+    val docs = Tables.t(spark, dir, "documents")
     val toks = docs
       .select(explode(split(col("text"), " ")).as("token"))
       .select(pmod(hash(col("token")), lit(shards)).cast("long").as("shard"),
@@ -1755,7 +1757,7 @@ object StreamOps {
       sinkName: String = "stream_hh_file_sink"): DataFrame = {
     require(counters >= share, "counters >= share (superset guarantee)")
     import spark.implicits._
-    val docs = graft.queries.Tables.t(spark, dir, "documents")
+    val docs = Tables.t(spark, dir, "documents")
     val toks0 = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("token"))
       .select(col("doc_id"),
@@ -1808,7 +1810,7 @@ object StreamOps {
       sinkName: String = "stream_phrase_sink"): DataFrame = {
     require(phrases.nonEmpty, "need at least one phrase")
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val ws = split(col("text"), " ")
     val hits = array(phrases.map { ph =>
@@ -1846,7 +1848,7 @@ object StreamOps {
   def weightedSampleOnce(spark: SparkSession, dir: String,
       sinkName: String = "stream_weighted_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val ws = split(col("text"), " ")
     val w = size(array_distinct(ws)).cast("long").cast("double") /
@@ -1875,7 +1877,7 @@ object StreamOps {
   def vocabOnce(spark: SparkSession, dir: String, k: Int,
       sinkName: String = "stream_vocab_sink"): DataFrame = {
     val tmp = linkedDir(dir, "documents")
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
+    val schema = Tables.schemaOf(spark, dir, "documents")
     val src = spark.readStream.schema(schema).parquet(tmp)
     val agg = src.select(explode(split(col("text"), " ")).as("token"))
       .groupBy("token").agg(count(lit(1)).as("n"))
@@ -1901,7 +1903,7 @@ object StreamOps {
       sinkName: String = "stream_sessionize_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("value"), col("event_id"))
       .as[(Long, Long, Double, Long)].collect()
@@ -1980,7 +1982,7 @@ object StreamOps {
     sessionRuns.getOrElseUpdate((spark, dir, gapMinutes), {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val recs = graft.queries.Tables.t(spark, dir, "events")
+      val recs = Tables.t(spark, dir, "events")
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("value"), col("event_id"))
         .as[(Long, Long, Double, Long)].collect()
@@ -2037,7 +2039,7 @@ object StreamOps {
       sinkName: String = "stream_sess_dyn_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("event_id"))
       .as[(Long, Long, String, Long)].collect()
@@ -2088,7 +2090,7 @@ object StreamOps {
   def sessionizeDynamicOnceFile(spark: SparkSession, dir: String,
       sinkName: String = "stream_sess_dyn_file_sink"): DataFrame = {
     val yearUs = 365L * 86400L * 1000000L
-    val feed0 = graft.queries.Tables.t(spark, dir, "events")
+    val feed0 = Tables.t(spark, dir, "events")
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_type"), col("event_id"))
     val bounds = feed0.agg(min(col("ts_us")).as("__t0"),
@@ -2177,7 +2179,7 @@ object StreamOps {
     intervalRuns.getOrElseUpdate((spark, dir, leftType, rightType, windowMinutes), {
       import spark.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val recs = graft.queries.Tables.t(spark, dir, "events")
+      val recs = Tables.t(spark, dir, "events")
         .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("event_type"), col("event_id"))
         .as[(Long, Long, String, Long)].collect()
@@ -2246,7 +2248,7 @@ object StreamOps {
       rule: String): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(unix_micros(col("ts")).as("ts_us"), col("value"))
       .as[EventRec].collect()
     val maxUs = recs.iterator.map(_.ts_us).max
@@ -2263,7 +2265,7 @@ object StreamOps {
     // fresh per run (the parquet streaming sink APPENDS — reuse would
     // double the data), but registered for JVM-exit cleanup
     val outPath = java.nio.file.Files.createTempDirectory("stream_pq_sink")
-    graft.queries.Tables.deleteOnExit(outPath)
+    Tables.deleteOnExit(outPath)
     val outDir = outPath.toString
     withHarnessConf(spark, "4") { ckpt =>
       val q = agg.writeStream
@@ -2291,7 +2293,7 @@ object StreamOps {
       sinkName: String = "stream_static_join_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val events = graft.queries.Tables.t(spark, dir, "events")
+    val events = Tables.t(spark, dir, "events")
     val recs = events
       .select(col("user_id"), col("value"), col("event_id"))
       .as[(Long, Double, Long)].collect()
@@ -2300,7 +2302,7 @@ object StreamOps {
     ms.addData(recs.toIndexedSeq)
     val src = ms.toDF().toDF("user_id", "value", "event_id")
     val profile = events.groupBy("user_id")
-      .agg(graft.queries.Tables.dsum(col("value")).as("user_total"),
+      .agg(Tables.dsum(col("value")).as("user_total"),
         count(lit(1)).as("user_n"))
     val joined = src.join(broadcast(profile), "user_id")
       .select(col("event_id"), col("user_id"), col("user_total"), col("user_n"))
@@ -2332,7 +2334,7 @@ object StreamOps {
       sinkName: String = "stream_update_sink"): DataFrame = {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val recs = graft.queries.Tables.t(spark, dir, "events")
+    val recs = Tables.t(spark, dir, "events")
       .select(col("user_id"), col("value"), col("event_id"))
       .as[(Long, Double, Long)].collect()
     val (b1, b2) = recs.splitAt(recs.length / 2)

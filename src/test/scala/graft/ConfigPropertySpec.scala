@@ -150,32 +150,23 @@ class ConfigPropertySpec extends SparkSpec {
 
   test("K6: applyAuto schema probe draws from the K1 sample, not a per-key re-scan") {
     val li = queries.Tables.t(spark, sf001, "lineitem")
-    @volatile var jobs = 0
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(l)
-    val planned = try {
+    val (planned, jobs) = org.apache.spark.GraftTestBus.jobsDuring(spark.sparkContext) {
       // the fn indexes rows and the key BY NAME: the driver-side probe
       // rows must carry a schema exactly like the encoder-decoded rows
       // the distributed flatMapGroups sees (r8 shipped schema-less
       // GenericRow probe rows because this test only indexed positionally)
-      val out = Swift(li).groupBy("l_returnflag").select("l_quantity")
+      Swift(li).groupBy("l_returnflag").select("l_quantity")
         .applyAuto(names = Seq("rf", "sq")) { (k, rows) =>
           var sq = 0.0
           rows.foreach(r => sq += r.getAs[Double]("l_quantity"))
           Iterator.single(org.apache.spark.sql.Row(
             k.getAs[String]("l_returnflag"), sq))
         }
-      org.apache.spark.GraftTestBus.drain(spark.sparkContext) // deterministic bus drain
-      out
-    } finally spark.sparkContext.removeSparkListener(l)
-    // probe cost: one count (nrows) + one bounded sample collect (+ the
-    // local-route collect for this small input) — NOT a limit-probe plus
-    // a full filter(key) scan of the input per inferred schema
-    assert(jobs <= 3, s"applyAuto probe launched $jobs jobs")
+    }
+    // probe cost: the one probe scan (count + sample; it also answers the
+    // routing count) — NOT a limit-probe plus a full filter(key) scan of
+    // the input per inferred schema
+    assert(jobs == 1, s"applyAuto probe launched $jobs jobs")
     assert(planned.schema.fieldNames.toSeq == Seq("rf", "sq"))
     assert(planned.count() == 3) // three return flags
   }
