@@ -26,7 +26,16 @@ object SessionDefaults {
     *    −33% total-wall change). Entries hold weak-referenced compiled
     *    classes, so 4096 entries is bounded metaspace, not corpus-scale
     *    state.
+    *  - `spark.sql.streaming.checkpointFileManagerClass =`
+    *    [[graft.streaming.LocalCheckpointFileManager]]: Spark's default
+    *    manager forks a `chmod` per created file and a `readlink` per rename
+    *    when the JVM has no native Hadoop library, ~112 forks per bounded
+    *    stream run (OPTIMIZATION_checkpoint.md). This one writes `file:`
+    *    checkpoints inside the JVM with the same files, `.crc` sidecars and
+    *    atomic rename; other schemes get Spark's default manager.
     */
   def apply(b: SparkSession.Builder): SparkSession.Builder =
     b.config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config(graft.streaming.LocalCheckpointFileManager.ConfKey,
+        classOf[graft.streaming.LocalCheckpointFileManager].getName)
 }

@@ -54,10 +54,11 @@ object Tables {
     val given = new Path(s"$dir/$name.parquet")
     val fs = given.getFileSystem(hadoopConf)
     val path = fs.makeQualified(given)
-    val files = Vector.newBuilder[FileStatus]
-    val it = fs.listFiles(path, true)
-    while (it.hasNext) files += it.next()
-    val snapshot = files.result().sortBy(_.getPath.toString)
+    // listStatus, not listFiles: listFiles builds LocatedFileStatuses, whose
+    // constructor reads the permission, which without native IO forks `ls -ld`
+    def files(p: Path): Seq[FileStatus] =
+      fs.listStatus(p).toSeq.flatMap(s => if (s.isDirectory) files(s.getPath) else Seq(s))
+    val snapshot = files(path).sortBy(_.getPath.toString)
     val confs = spark.conf.getAll.filter { case (k, _) =>
       k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
     }

@@ -24,10 +24,11 @@ object StreamOps {
     *  - no-data micro-batches OFF — every harness here sequences
     *    watermark advancement with explicit data batches (the two-sentinel
     *    pattern in [[sessionizeOnceEventTime]]), so the extra
-    *    watermark-advance batches are pure per-batch state-store overhead;
-    *  - checkpoints on tmpfs when available: the HDFS-backed state store
-    *    fsyncs a delta file per partition per batch, which for a bounded
-    *    replay is measurement noise, not durability anyone needs. */
+    *    watermark-advance batches are pure per-batch state-store overhead.
+    * Checkpoint I/O is not set here: the session's checkpoint file manager
+    * ([[LocalCheckpointFileManager]], a `SessionDefaults` conf) writes the
+    * offsets, commits and state deltas of `file:` checkpoints without the
+    * `chmod`/`readlink` forks that were most of a run's state-commit time. */
   private def withStreamConf[T](spark: SparkSession, parts: String)(body: => T): T = {
     val conf = spark.conf
     val oldParts = conf.get("spark.sql.shuffle.partitions")
@@ -41,7 +42,10 @@ object StreamOps {
     }
   }
 
-  /** Fresh checkpoint dir, on tmpfs when the host has one. */
+  /** Fresh checkpoint dir, on tmpfs when the host has one. Checkpoint
+    * writes never fsync (neither Spark's managers nor Hadoop's local file
+    * system call it), so tmpfs only spares the page-cache writeback of
+    * files deleted right after the run. */
   private def ckptDir(): java.nio.file.Path = {
     val shm = java.nio.file.Paths.get("/dev/shm")
     val base = if (java.nio.file.Files.isWritable(shm)) shm

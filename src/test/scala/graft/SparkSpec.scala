@@ -4,7 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession fixture for all specs. */
+/** Shared local SparkSession fixture for all specs, built through the
+  * engine's `SessionDefaults` so every spec runs under the engine's confs. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   def sf001 = "/root/testdata/sf0.001"
@@ -14,7 +15,7 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val tmp = java.nio.file.Files.createTempDirectory("spark-test").toString
     System.setProperty("derby.system.home", tmp)
-    val s = SparkSession.builder()
+    val s = graft.core.SessionDefaults(SparkSession.builder())
       .master("local[4]")
       .appName("swifterspark-test")
       .config("spark.sql.shuffle.partitions", "4")
